@@ -60,6 +60,8 @@ import numpy as np
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from ..session import local_frame
+
 
 def _versions_dir(root: str) -> str:
     return os.path.join(root, "_versions")
@@ -2174,12 +2176,11 @@ def read_version(
     if not dirs:
         # every directory pruned out of range, or the version holds zero
         # data directories (a full-table delete_where) — an empty frame
-        # in the table's committed schema (no parquet path to scan)
+        # in the table's committed schema (no parquet path to scan; a
+        # local relation, so reading it starts no Python worker)
         from pyspark.sql.types import StructType
 
-        return spark.createDataFrame(
-            [], StructType.fromJson(manifest["schema"])
-        )
+        return local_frame(spark, [], StructType.fromJson(manifest["schema"]))
     paths = [os.path.join(root, p) for p in dirs]
     # schema always explicit from the manifest (``_read_data``): evolved
     # tables resolve files by name against the union schema (columns a
@@ -2657,7 +2658,8 @@ def stats_agg(
             values.append(int(cnts[c]))
     for c in sums:
         values.append(int(sums_acc[c]) if sums_nn[c] > 0 else None)
-    return spark.createDataFrame([tuple(values)], StructType(out_fields))
+    # a local relation: the metadata-only answer starts no Python worker
+    return local_frame(spark, [tuple(values)], StructType(out_fields))
 
 
 def _long_type():
@@ -3102,7 +3104,7 @@ def table_snapshots(spark: SparkSession, root: str) -> DataFrame:
             StructField("batch_id", LongType(), True),
         ]
     )
-    return spark.createDataFrame(out, schema)
+    return local_frame(spark, out, schema)
 
 
 def history(root: str) -> list[dict]:

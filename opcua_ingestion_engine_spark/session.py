@@ -1,4 +1,5 @@
-"""SparkSession factory tuned for this engine.
+"""SparkSession factory tuned for this engine, and ``local_frame``, which
+builds small driver-held frames as JVM-resident local relations.
 
 Local test profile: ``local[$SPARK_GRAFT_CPUS]`` single-JVM. The same settings
 scale to a real cluster: AQE for runtime re-planning (skew joins, partition
@@ -14,7 +15,7 @@ from __future__ import annotations
 
 import os
 
-from pyspark.sql import SparkSession
+from pyspark.sql import DataFrame, SparkSession
 
 
 def get_spark(app_name: str = "opcua_ingestion_engine_spark") -> SparkSession:
@@ -43,3 +44,31 @@ def get_spark(app_name: str = "opcua_ingestion_engine_spark") -> SparkSession:
         .config("spark.ui.showConsoleProgress", "false")
         .getOrCreate()
     )
+
+
+def local_frame(spark: SparkSession, rows, schema) -> DataFrame:
+    """A DataFrame over driver-held rows, planned as a ``LocalRelation``
+    (``LocalTableScan``): every scan or broadcast of it stays in the JVM.
+
+    ``spark.createDataFrame(<list of tuples>)`` gives a Python-RDD-backed
+    ``Scan ExistingRDD`` instead, and each job over that starts Python
+    workers (about 0.3 s per task before any user code runs). Going
+    through a ``pyarrow.Table`` gives a local relation whatever the
+    session's Arrow setting. ``rows`` are tuples in ``schema`` order;
+    ``schema`` is a StructType or a DDL string. A naive datetime in a
+    timestamp column is read in the process's local zone, as
+    ``createDataFrame(<list>)`` reads it."""
+    import pyarrow as pa
+    from pyspark.sql.pandas.types import to_arrow_schema
+    from pyspark.sql.types import DataType, TimestampType
+
+    if isinstance(schema, str):
+        schema = DataType.fromDDL(schema)
+    arrow_schema = to_arrow_schema(schema)
+    cols = []
+    for i, (field, arrow_field) in enumerate(zip(schema.fields, arrow_schema)):
+        vals = [r[i] for r in rows]
+        if isinstance(field.dataType, TimestampType):
+            vals = [v.astimezone() if v is not None and v.tzinfo is None else v for v in vals]
+        cols.append(pa.array(vals, type=arrow_field.type))
+    return spark.createDataFrame(pa.Table.from_arrays(cols, schema=arrow_schema), schema)

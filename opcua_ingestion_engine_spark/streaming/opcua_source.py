@@ -63,8 +63,10 @@ def _load_notifications(path: str):
     ev = ev.assign(
         source_us=ts_us,
         received_us=ts_us + (ev["event_id"] % 150) * 1_000_000,
-        # identical arithmetic to catalog.opc_updates / SQL_OPC_UPDATES
-        conn_id=(ev["user_id"] % 3).astype("int64"),
+        # identical arithmetic to catalog.opc_updates / SQL_OPC_UPDATES:
+        # the connection is the DEVICE's (user_id % 100), as site_devices
+        # assigns it, not the raw user's
+        conn_id=(ev["user_id"] % 100 % 3).astype("int64"),
     )
     return ev
 

@@ -101,6 +101,13 @@ class ModvaluesMergeSink:
     safety — a concurrent committer forces a CAS rebase, not a lost
     update (the reference's row-locked upsert,
     ``Services/OpcSubscribeService.cs:608-641``, done optimistically).
+
+    The static half of the view (``mon``/``tpl``, ``ingest.catalog_frames``)
+    is derived once, when the sink is built, so ``snapshot()`` works
+    before any batch — in particular on a sink just recovered from
+    ``state_root``. ``snapshot()`` is one ``spark.sql`` statement over the
+    state and those two frames (``ingest.snapshot_from_state``), the same
+    back half as the batch flagship.
     """
 
     def __init__(
@@ -117,8 +124,7 @@ class ModvaluesMergeSink:
         self.queue_size = queue_size
         self.state_root = state_root
         self.state: DataFrame | None = None
-        self.mon = None
-        self.tpl = None
+        self.mon, self.tpl = ingest.catalog_frames(devices, templates)
         self.batches_seen = 0
         self._committed_batch_ids: set[int] = set()
         if state_root is not None:
@@ -143,11 +149,9 @@ class ModvaluesMergeSink:
             return  # replayed batch already committed to the state table
         if self.queue_size is not None:
             batch = shed_to_queue_bound(batch, self.queue_size)
-        joined, mon, tpl = ingest.prepare_stream(
+        joined, _, _ = ingest.prepare_stream(
             batch, self.devices, self.templates, self.connections
         )
-        if self.mon is None:
-            self.mon, self.tpl = mon, tpl
         # eager: commit_merge may re-run the merge on a CAS rebase, and
         # the ephemeral path's checkpoint would otherwise re-derive the
         # whole prepare/perpoint lineage there

@@ -622,10 +622,43 @@ def test_restart_from_checkpoint_resumes_exactly_once(spark, fixtures, tmp_path)
     assert _rows(sink.snapshot()) == _rows(batch)
 
 
-def test_batch_reader_matches_catalog_derivation(spark):
+def _seeded_events(out_dir: str, seed: int = 7, n: int = 2_000) -> str:
+    """An ``events``-shaped parquet file whose user ids run past 100, so
+    users fold onto devices (``user_id % 100``) as at sf0.1; returns the
+    directory."""
+    import os
+
+    import numpy as np
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    rng = np.random.default_rng(seed)
+    start_us = 1_704_067_200_000_000  # 2024-01-01T00:00:00Z
+    os.makedirs(out_dir, exist_ok=True)
+    pq.write_table(
+        pa.table({
+            "event_id": pa.array(np.arange(n, dtype=np.int64)),
+            "ts": pa.array(start_us + np.sort(rng.integers(0, 86_400_000_000, n)),
+                           pa.timestamp("us")),
+            "user_id": pa.array(rng.integers(0, 1_500, n, dtype=np.int64)),
+            "event_type": pa.array(np.array(
+                ["click", "view", "signup", "purchase", "error"])[rng.integers(0, 5, n)]),
+            "value": pa.array(np.round(rng.exponential(50.0, n), 2)),
+            "props": pa.array(["{}"] * n),
+        }),
+        os.path.join(out_dir, "events.parquet"),
+    )
+    return out_dir
+
+
+def test_batch_reader_matches_catalog_derivation(spark, tmp_path):
     """The connector's batch form (spark.read.format('opcua_sim')) must
     produce exactly the notification set catalog.opc_updates derives with
-    DataFrame expressions."""
+    DataFrame expressions — also on a history with user ids >= 100, where
+    the connection must be the device's (user_id % 100 % 3), not the raw
+    user's (user_id % 3)."""
+    import pyarrow.parquet as pq
+
     from opcua_ingestion_engine_spark import catalog as C
     from opcua_ingestion_engine_spark.streaming.opcua_source import (
         OpcUaSimDataSource,
@@ -635,15 +668,68 @@ def test_batch_reader_matches_catalog_derivation(spark):
         spark.dataSource.register(OpcUaSimDataSource)
     except Exception:
         pass  # already registered by another test in this session
-    got = (
-        spark.read.format("opcua_sim")
-        .option("path", f"{SF_SMOKE}/events.parquet")
-        .load()
+    seeded = _seeded_events(str(tmp_path / "seeded"))
+    users = pq.read_table(f"{seeded}/events.parquet").column("user_id").to_pylist()
+    assert any(u % 3 != u % 100 % 3 for u in users)
+    for sf_dir in (SF_SMOKE, seeded):
+        got = (
+            spark.read.format("opcua_sim")
+            .option("path", f"{sf_dir}/events.parquet")
+            .load()
+        )
+        want = C.opc_updates(spark, sf_dir)
+        assert _rows(got.select(*sorted(got.columns))) == _rows(
+            want.select(*sorted(want.columns))
+        ), sf_dir
+
+
+def _python_backed_nodes(df) -> list[str]:
+    """Nodes of ``df``'s physical plan that run Python: Python/pandas
+    evaluation nodes, and RDD scans whose lineage holds a PythonRDD (a
+    ``createDataFrame(<list>)`` frame)."""
+    out = []
+    stack = [df._jdf.queryExecution().sparkPlan()]
+    while stack:
+        node = stack.pop()
+        name = node.getClass().getSimpleName()
+        if "Python" in name or "Pandas" in name:
+            out.append(name)
+        elif name == "RDDScanExec" and "PythonRDD" in node.rdd().toDebugString():
+            out.append(node.simpleString(25))
+        children = node.children()
+        stack.extend(children.apply(i) for i in range(children.size()))
+    return out
+
+
+def test_catalog_dimensions_and_snapshot_stay_in_the_jvm(spark, fixtures, tmp_path):
+    """The list-defined catalog dimensions and the table layer's
+    metadata-only frames plan as ``LocalTableScan`` (no Python-RDD-backed
+    ``Scan ExistingRDD``), and the physical plan of a sink's view holds
+    no Python-backed node."""
+    from opcua_ingestion_engine_spark import catalog as C
+    from opcua_ingestion_engine_spark.operators import tablefmt as TF
+    from opcua_ingestion_engine_spark.streaming import replay
+
+    def plan(df):
+        return df._jdf.queryExecution().executedPlan().toString()
+
+    root = str(tmp_path / "durable_state")
+    sink = replay.ModvaluesMergeSink(
+        fixtures["devices"], fixtures["templates"], fixtures["connections"],
+        state_root=root,
     )
-    want = C.opc_updates(spark, SF_SMOKE)
-    assert _rows(got.select(*sorted(got.columns))) == _rows(
-        want.select(*sorted(want.columns))
-    )
+    sink.process_batch(fixtures["updates"], 0)
+    frames = {
+        "sos_templates": C.sos_templates(spark),
+        "opc_client_connections": C.opc_client_connections(spark),
+        "browse_exclusion_folders": C.browse_exclusion_folders(spark),
+        "table_snapshots": TF.table_snapshots(spark, root),
+        "stats_agg": TF.stats_agg(spark, root),
+    }
+    for name, df in frames.items():
+        p = plan(df)
+        assert "LocalTableScan" in p and "ExistingRDD" not in p, (name, p)
+    assert _python_backed_nodes(sink.snapshot()) == []
 
 
 def _has_protobuf() -> bool:
@@ -1033,7 +1119,8 @@ def test_incremental_neardup_redelivery_is_idempotent(spark):
 def test_durable_state_restart_redelivery_and_versions(spark, fixtures, tmp_path):
     """Durable sink mode (state committed per micro-batch through the
     tablefmt manifest CAS): (1) a RESTART mid-stream — new sink object,
-    same state root — resumes from the committed snapshot and the final
+    same state root — resumes from the committed snapshot, serves the
+    same view as the writer before its first batch, and the final
     state still equals the batch flagship; (2) REDELIVERING an already-
     merged batch commits a new version whose snapshot is IDENTICAL (the
     LWW reducer is idempotent); (3) the version chain is linear."""
@@ -1060,9 +1147,11 @@ def test_durable_state_restart_redelivery_and_versions(spark, fixtures, tmp_path
         sink_a.process_batch(spark.read.schema(schema).parquet(p), i)
     assert TF.latest_version(root) == 1
 
-    # (1) restart: fresh sink resumes from the committed snapshot
+    # (1) restart: fresh sink resumes from the committed snapshot, and
+    # serves the current-state view before its first batch
     sink_b = mk_sink()
     assert sink_b.state is not None
+    assert _rows(sink_b.snapshot()) == _rows(sink_a.snapshot())
     for i, p in enumerate(paths[2:], start=2):
         sink_b.process_batch(spark.read.schema(schema).parquet(p), i)
     assert _rows(sink_b.snapshot()) == _rows(batch)
