@@ -31,6 +31,7 @@ from pyspark.sql import functions as F
 
 from ..functions.scaling import apply_scaling
 from ..functions.timefmt import MODVALUES_TS_FMT
+from ..session import local_frame
 
 
 # ---------------------------------------------------------------------------
@@ -260,21 +261,22 @@ EPOCH_TS_TEXT = "1970-01-01T00:00:00.000000"
 
 
 def catalog_frames(devices: DataFrame, templates: DataFrame):
-    """The static half of the ingestion pipeline, shared by the front
-    half (``prepare_stream``) and the back half (``snapshot_from_state``):
-    ``mon`` (monitored OPCUA devices: daq_name, device_type,
-    daq_template) and ``tpl`` (the template points under join-safe
-    names). Both depend on the catalog only, so a streaming sink derives
-    them once, when it is built.
+    """The static half of the ingestion pipeline: ``mon`` (monitored
+    OPCUA devices: daq_name, device_type, daq_template) and ``tpl`` (the
+    template points under join-safe names). The front half
+    (``prepare_stream``) broadcasts both into the stream; the back half
+    (``snapshot_from_state``) reads them as the local static rows that
+    ``static_rows`` derives from them (the monitored devices and the
+    configured points). Both depend on the catalog only, so a streaming
+    sink derives the static rows once, when it is built.
 
     ``mon`` needs no materialization of its own: ``devices`` arrives as
     the catalog's memoized+checkpointed dimension (catalog.site_devices),
     so each of mon's consumers re-evaluates only a trivial filter+project
-    over cached blocks — an extra localCheckpoint here measured as one
-    redundant ~0.2s job per snapshot build. (persist() is still wrong for
-    the same reason as ever: CacheManager entries accumulate across
-    repeated builds and every new plan pays an O(cached-plans) sameResult
-    scan — measured 4x slowdown by the third call at sf0.1.)
+    over cached blocks. (persist() is wrong for the same reason as ever:
+    CacheManager entries accumulate across repeated builds and every new
+    plan pays an O(cached-plans) sameResult scan — measured 4x slowdown
+    by the third call at sf0.1.)
     """
     mon = monitored_devices(devices).select("daq_name", "device_type", "daq_template")
     tpl = templates.select(
@@ -402,48 +404,93 @@ def merge_perpoint_states(current: DataFrame | None, incoming: DataFrame) -> Dat
     )
 
 
-# ``{state}``, ``{mon}`` and ``{tpl}`` name the three input frames;
-# ``:window_us``, ``:ts_fmt`` and ``:epoch`` are bound literals. The
-# hints keep every small side a broadcast: the state's size is unknown
-# to the planner when it is a checkpointed frame.
+def static_rows(mon: DataFrame, tpl: DataFrame):
+    """The back half's static inputs, as JVM-local relations
+    (``session.local_frame``) built from ``catalog_frames``' output:
+    ``(devices, points)``.
+
+    - ``devices``: one row per monitored device (daq_name, device_type)
+      — the A3 liveness rows.
+    - ``points``: the configured points, the J1 join of monitored
+      devices and template points (daq_name, device_type, measure_name,
+      tag_name, unit) — the S10 seed rows. Duplicate template rows stay
+      duplicated, as the inner join keeps them.
+
+    Runs two small Spark jobs (one collect each) to bring the rows to
+    the driver, so it is meant to run once per catalog: a streaming sink
+    calls it when it is built. Both are O(configured points): about 500
+    rows at every scale this engine serves, because devices are
+    ``user_id % 100``."""
+    spark = mon.sparkSession
+    devices = mon.select("daq_name", "device_type").collect()
+    points = (
+        mon.join(
+            tpl,
+            (F.col("device_type") == F.col("t_device_type"))
+            & (F.col("daq_template") == F.col("template_name")),
+        )
+        .select("daq_name", "device_type", "t_measure_name", "cfg_tag_name", "unit")
+        .collect()
+    )
+    return (
+        local_frame(spark, devices, "daq_name string, device_type string"),
+        local_frame(
+            spark,
+            points,
+            "daq_name string, device_type string, measure_name string, "
+            "tag_name string, unit string",
+        ),
+    )
+
+
+# ``{state}``, ``{points}`` and ``{devices}`` name the three input
+# frames; ``:window_us``, ``:ts_fmt`` and ``:epoch`` are bound literals.
+# ``kind`` tells the unioned rows apart: 0 state, 1 configured point,
+# 2 monitored device. Only state rows carry ``good_latest`` and
+# ``last_any``, so the window maxima see the state alone.
 _SNAPSHOT_SQL = """
-WITH good AS (
-    SELECT * FROM {state} WHERE good_latest IS NOT NULL
+WITH united AS (
+    SELECT /*+ COALESCE(1) */ * FROM (
+        SELECT 0 AS kind, daq_name, device_type, measure_name, tag_name, unit,
+               good_latest, last_any
+        FROM {state}
+        UNION ALL
+        SELECT 1, daq_name, device_type, measure_name, tag_name, unit, NULL, NULL
+        FROM {points}
+        UNION ALL
+        SELECT 2, daq_name, device_type, NULL, NULL, NULL, NULL, NULL
+        FROM {devices}
+    )
 ),
-device_last AS (
-    SELECT daq_name, max(last_any) AS last_any FROM {state} GROUP BY daq_name
+marked AS (
+    SELECT *,
+           max(good_latest IS NOT NULL)
+               OVER (PARTITION BY daq_name, measure_name) AS has_good,
+           max(last_any) OVER (PARTITION BY daq_name) AS device_last,
+           max(last_any.ts) OVER () AS now_ts
+    FROM united
 ),
-logical_now AS (
-    SELECT max(last_any.ts) AS now_ts FROM {state}
-),
-live AS (
-    SELECT /*+ BROADCAST(d), BROADCAST(n) */
-           m.daq_name, m.device_type, d.last_any,
-           CASE WHEN d.last_any IS NOT NULL AND d.last_any.status = 0
-                     AND unix_micros(n.now_ts) - unix_micros(d.last_any.ts) <= :window_us
-                THEN 1.0D ELSE 0.0D END AS online
-    FROM {mon} m
-    LEFT JOIN device_last d ON m.daq_name = d.daq_name
-    CROSS JOIN logical_now n
+emitted AS (
+    SELECT daq_name, device_type,
+           CASE kind WHEN 2 THEN 'myPV_online' ELSE tag_name END AS tag_name,
+           CASE kind WHEN 2 THEN 'myPV_online' ELSE measure_name END AS measure_name,
+           CASE kind WHEN 2 THEN 'bool' ELSE unit END AS unit,
+           CASE WHEN kind = 0 THEN good_latest.scaled_value
+                WHEN kind = 2 AND device_last.status = 0
+                     AND unix_micros(now_ts) - unix_micros(device_last.ts) <= :window_us
+                THEN 1.0D ELSE 0.0D END AS value,
+           CASE kind WHEN 0 THEN date_format(good_latest.received_ts, :ts_fmt)
+                     WHEN 2 THEN coalesce(date_format(device_last.ts, :ts_fmt), :epoch)
+                     ELSE :epoch END AS last_updated
+    FROM marked
+    WHERE (kind = 0 AND good_latest IS NOT NULL)
+       OR (kind = 1 AND NOT has_good)
+       OR kind = 2
 )
-SELECT daq_name AS device, device_type, tag_name,
-       good_latest.scaled_value AS tag_value, measure_name,
-       good_latest.scaled_value AS measure_value,
-       unit AS source_unit, unit AS destination_unit,
-       date_format(good_latest.received_ts, :ts_fmt) AS last_updated,
-       'instant' AS logging
-FROM good
-UNION ALL
-SELECT /*+ BROADCAST(t), BROADCAST(o) */
-       m.daq_name, m.device_type, t.cfg_tag_name, 0.0D, t.t_measure_name, 0.0D,
-       t.unit, t.unit, :epoch, 'instant'
-FROM {mon} m
-JOIN {tpl} t ON m.device_type = t.t_device_type AND m.daq_template = t.template_name
-LEFT ANTI JOIN good o ON m.daq_name = o.daq_name AND t.t_measure_name = o.measure_name
-UNION ALL
-SELECT daq_name, device_type, 'myPV_online', online, 'myPV_online', online,
-       'bool', 'bool', coalesce(date_format(last_any.ts, :ts_fmt), :epoch), 'instant'
-FROM live
+SELECT daq_name AS device, device_type, tag_name, value AS tag_value, measure_name,
+       value AS measure_value, unit AS source_unit, unit AS destination_unit,
+       last_updated, 'instant' AS logging
+FROM emitted
 """
 
 
@@ -454,33 +501,52 @@ def snapshot_from_state(
     liveness_window_s: int = 60,
 ) -> DataFrame:
     """Back half of the flagship: per-point state -> modvalues-shaped rows
-    (value rows + S10 seed rows + A3 liveness rows). O(points) input; all
-    small-side joins broadcast.
+    (value rows + S10 seed rows + A3 liveness rows).
 
-    Issued as ONE ``spark.sql`` statement (``_SNAPSHOT_SQL``) over the
-    three frames, so building the view costs one parse and one analysis:
-    21 py4j round trips and 0.17–0.18 s of driver time before the first
-    job, where the DataFrame form of the same view made 1,070 round
-    trips in 0.27–0.37 s (benchmark seed-1 history, ``local[2]``). The
-    rows, the schema and the plan's shape are the DataFrame form's: one
-    BroadcastNestedLoopJoin (the logical-now cross join), no sort-merge
-    join, every other join a broadcast hash join.
+    ``mon`` and ``tpl`` are the static rows of ``static_rows``: ``mon``
+    the monitored devices, ``tpl`` the CONFIGURED POINTS (monitored
+    devices x template points), not the bare templates of
+    ``catalog_frames``. Pass them as JVM-local relations.
 
     Value rows: the latest good update of each point. Seed rows (S10):
-    configured points with no good update, zero-valued and stamped with
-    the epoch. Liveness rows (A3): per monitored device, 1.0 iff its
-    latest event of any status is good and within ``liveness_window_s``
-    of the logical now (the latest event over the whole state)."""
+    configured points with no good update of their (device, measure),
+    zero-valued and stamped with the epoch. Liveness rows (A3): per
+    monitored device, 1.0 iff its latest event of any status is good
+    and within ``liveness_window_s`` of the logical now (the latest
+    event over the whole state).
+
+    One stage, so one job with one task: ``_SNAPSHOT_SQL`` unions the
+    state with the points and the devices, coalesces the union to one
+    partition (``COALESCE(1)``, no shuffle), and three window functions
+    over that partition give the seed test (any good row per
+    (daq_name, measure_name)), each device's latest event and the
+    logical now, with no exchange, no broadcast and no join. One
+    projection then emits the three kinds of row. The earlier join form
+    (a logical-now BroadcastNestedLoopJoin, a per-device GROUP BY
+    shuffle, a global-max shuffle and three broadcasts) ran 7 jobs and
+    10 tasks per read; on the benchmark's ``ingest_opcua_durable`` (``local[2]``,
+    10 alternating pairs, seeds 1–10) the median ``read_s_p50`` went
+    from 0.540 s to 0.331 s.
+
+    ``COALESCE(1)`` pulls the whole narrow lineage below it into the one
+    task. That is safe here because every input starts at a
+    materialization or a shuffle: the durable sink's parquet state, the
+    ephemeral sink's eager checkpoint, the batch flagship's checkpointed
+    aggregate (its shuffle stays a stage of its own) and the local
+    relations; all are O(configured points). A state frame with a fact
+    scan under narrow operators would run that scan in one task.
+
+    The frames are bound as GLOBAL temp views: a streaming sink's state
+    lives in the stream's cloned session while the static rows live in
+    the session that built the sink, and session-local views (what
+    ``spark.sql(text, state=df)`` registers) are invisible across the
+    two. The statement is analyzed eagerly, so the views can go at
+    once."""
     spark = perpoint.sparkSession
-    # The frames are bound as GLOBAL temp views: a streaming sink's state
-    # lives in the stream's cloned session while mon/tpl live in the
-    # session that built the sink, and session-local views (what
-    # ``spark.sql(text, state=df)`` registers) are invisible across the
-    # two. The statement is analyzed eagerly, so the views can go at once.
     db = spark.conf.get("spark.sql.globalTempDatabase")
     views = {}
     try:
-        for key, df in (("state", perpoint), ("mon", mon), ("tpl", tpl)):
+        for key, df in (("state", perpoint), ("devices", mon), ("points", tpl)):
             views[key] = f"_modvalues_{key}_{uuid.uuid4().hex}"
             df.createGlobalTempView(views[key])
         return spark.sql(
@@ -509,10 +575,16 @@ def modvalues_snapshot(
 
     Pipeline: prepare_stream (F5/F3/J1/J2/J3) -> perpoint_state (X1-X3 +
     the fused A2+liveness aggregation) -> snapshot_from_state (value rows
-    + S10 seed rows + A3 liveness rows). Streaming composes the SAME three
-    functions with merge_perpoint_states inside foreachBatch
-    (streaming/replay.py), so batch and replayed results are provably the
-    same computation.
+    + S10 seed rows + A3 liveness rows, over ``static_rows``). Streaming
+    composes the SAME three functions with merge_perpoint_states inside
+    foreachBatch (streaming/replay.py), so batch and replayed results are
+    provably the same computation.
+
+    Building the query is not lazy: ``static_rows`` collects the
+    monitored devices and the configured points (two small jobs over the
+    catalog) while the DataFrame is built, so even a caller that only
+    explains the plan runs those two jobs. The events scan and the
+    per-point aggregate stay lazy.
 
     Reference anchors: DDL OpcSubscribeService.cs:140-152; insert defaults
     :687-705; tag_value == measure_value :636-637; logging='instant' :702;
@@ -523,13 +595,13 @@ def modvalues_snapshot(
     Scale design: events is scanned ONCE; the single wide shuffle is the
     per-point aggregation (map-side partial combine). Everything downstream
     of ``perpoint`` is O(configured points) — it is LAZILY
-    localCheckpoint'ed: the checkpoint collapses the three output branches
-    onto one shared RDD lineage (left un-checkpointed each branch plans
-    its own copy of the stream aggregate), and lazy materialization fuses
-    the aggregate into the output job itself — one job instead of an
-    eager-checkpoint job plus an assembly job (measured 2.7 s -> 2.0 s
-    warm at sf0.1).
+    localCheckpoint'ed: the checkpoint is the materialization the
+    snapshot's ``COALESCE(1)`` may sit on (the aggregate's shuffle stays
+    a stage of its own, so the events scan keeps its parallelism), and
+    lazy materialization fuses the aggregate's reduce side into the
+    output job itself — one job instead of an eager-checkpoint job plus
+    an assembly job (measured 2.7 s -> 2.0 s warm at sf0.1).
     """
     joined, mon, tpl = prepare_stream(updates, devices, templates, connections)
     perpoint = perpoint_state(joined).localCheckpoint(eager=False)
-    return snapshot_from_state(perpoint, mon, tpl, liveness_window_s)
+    return snapshot_from_state(perpoint, *static_rows(mon, tpl), liveness_window_s)

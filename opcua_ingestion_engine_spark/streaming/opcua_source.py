@@ -44,13 +44,48 @@ SCHEMA = (
 BAD_STATUS = 2147483648
 
 
-def _load_notifications(path: str):
+# received_ts = source_ts + (event_id % 150) s: a notification lands at
+# most this long after its source timestamp
+_MAX_DELAY_US = 150 * 1_000_000
+
+
+def _source_ts_filter(ts_type, start_us: int, end_us: int):
+    """A pyarrow filter on the fixture's ``ts`` column that keeps every
+    row whose received ts can fall in the window ``(start_us, end_us]``:
+    source ts in ``(start_us - 150 s, end_us]``, widened to whole units
+    of the column's type. TIMESTAMP columns compare in their own unit; a
+    raw int64 column holds nanoseconds."""
+    import pyarrow as pa
+    import pyarrow.compute as pc
+
+    lo, hi = start_us - _MAX_DELAY_US, end_us
+    per_us = {"s": 1_000_000, "ms": 1_000, "us": 1}.get(getattr(ts_type, "unit", "ns"))
+    if per_us is None:  # nanoseconds
+        lo, hi = lo * 1_000, hi * 1_000
+    else:
+        lo, hi = lo // per_us, -(-hi // per_us)
+    ts = pc.field("ts")
+    return (ts >= pa.scalar(lo, ts_type)) & (ts <= pa.scalar(hi, ts_type))
+
+
+def _load_notifications(path: str, window: tuple[int, int] | None = None):
     """Read the events fixture into notification-shaped numpy columns.
     Runs inside a partition read (executor) or at planning time (driver) —
-    plain pyarrow, no SparkSession."""
+    plain pyarrow, no SparkSession.
+
+    ``window=(start_us, end_us)`` reads only the rows that can arrive in
+    that received-ts window: the parquet read filters on the source ts
+    (skipping row groups by their statistics) before any pandas
+    conversion, so a micro-batch costs O(window), not O(history). The
+    caller still applies the exact received-ts bounds."""
     import pyarrow.parquet as pq
 
-    t = pq.read_table(path, columns=["event_id", "user_id", "event_type", "value", "ts"])
+    filters = None
+    if window is not None:
+        filters = _source_ts_filter(pq.read_schema(path).field("ts").type, *window)
+    t = pq.read_table(
+        path, columns=["event_id", "user_id", "event_type", "value", "ts"], filters=filters
+    )
     ev = t.to_pandas()
     ts = ev["ts"]
     # Fixture generations differ: TIMESTAMP(NANOS) arrives as
@@ -151,14 +186,15 @@ class OpcUaSimStreamReader(DataSourceStreamReader):
 
 def _read_partition(partition: _ConnWindowPartition):
     """Vectorized partition read shared by the stream and batch readers:
-    one pandas pass + ONE Arrow RecordBatch yielded per (connection,
-    window) — the DataSource API consumes Arrow batches directly,
+    the window's rows only (``_load_notifications``), one pandas pass
+    and ONE Arrow RecordBatch yielded per (connection, window) — the
+    DataSource API consumes Arrow batches directly,
     skipping per-row Python tuple pickling (the row-at-a-time form is
     the classic Python-source bottleneck once notification volume
     grows)."""
     import pyarrow as pa
 
-    ev = _load_notifications(partition.path)
+    ev = _load_notifications(partition.path, (partition.start_us, partition.end_us))
     m = (
         (ev["conn_id"] == partition.conn_id)
         & (ev["received_us"] > partition.start_us)

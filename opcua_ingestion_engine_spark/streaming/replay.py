@@ -102,12 +102,15 @@ class ModvaluesMergeSink:
     update (the reference's row-locked upsert,
     ``Services/OpcSubscribeService.cs:608-641``, done optimistically).
 
-    The static half of the view (``mon``/``tpl``, ``ingest.catalog_frames``)
-    is derived once, when the sink is built, so ``snapshot()`` works
-    before any batch — in particular on a sink just recovered from
-    ``state_root``. ``snapshot()`` is one ``spark.sql`` statement over the
-    state and those two frames (``ingest.snapshot_from_state``), the same
-    back half as the batch flagship.
+    The static half of the view is derived once, when the sink is
+    built, as JVM-local rows (``ingest.static_rows``): ``mon`` holds the
+    monitored devices and ``tpl`` the configured points (monitored
+    devices x template points), the two frames
+    ``ingest.snapshot_from_state`` takes. So ``snapshot()`` works before
+    any batch — in particular on a sink just recovered from
+    ``state_root`` — and each read scans driver-held rows instead of
+    re-deriving the catalog join: it is one statement that runs as one
+    job with one task, the same back half as the batch flagship.
     """
 
     def __init__(
@@ -124,7 +127,7 @@ class ModvaluesMergeSink:
         self.queue_size = queue_size
         self.state_root = state_root
         self.state: DataFrame | None = None
-        self.mon, self.tpl = ingest.catalog_frames(devices, templates)
+        self.mon, self.tpl = ingest.static_rows(*ingest.catalog_frames(devices, templates))
         self.batches_seen = 0
         self._committed_batch_ids: set[int] = set()
         if state_root is not None:

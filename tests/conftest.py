@@ -21,6 +21,26 @@ def spark():
     yield s
 
 
+@pytest.fixture(scope="module")
+def executed_plans(spark):
+    """Keep operators over driver-held test inputs on the executed path.
+
+    ``session.local_frame`` inputs are ``LocalRelation``s, and Spark's
+    ``ConvertToLocalRelation`` rule folds a deterministic Project, Filter
+    or Limit over one at optimize time, evaluated interpreted on the
+    driver. With the rule excluded for the module, those operators run
+    as code-generated tasks, as they do over a parquet input (Spark's own
+    test sessions exclude the rule for the same reason)."""
+    key = "spark.sql.optimizer.excludedRules"
+    old = spark.conf.get(key, None)
+    spark.conf.set(key, "org.apache.spark.sql.catalyst.optimizer.ConvertToLocalRelation")
+    yield
+    if old is None:
+        spark.conf.unset(key)
+    else:
+        spark.conf.set(key, old)
+
+
 @pytest.fixture(scope="session")
 def duck():
     import duckdb

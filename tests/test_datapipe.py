@@ -8,7 +8,11 @@ from __future__ import annotations
 
 import pytest
 
+from opcua_ingestion_engine_spark.session import local_frame
+
 from tests.conftest import SF_CORRECT
+
+pytestmark = pytest.mark.usefixtures("executed_plans")
 
 
 @pytest.fixture(scope="module")
@@ -91,7 +95,7 @@ def test_contamination_planted(spark):
         (2, f"prefix words then {bench_text} and a suffix"),
         (3, "another clean document that shares nothing with the benchmark set"),
     ]
-    docs = spark.createDataFrame(rows, "doc_id long, text string")
+    docs = local_frame(spark, rows, "doc_id long, text string")
     out = {r["doc_id"]: r["contaminated"] for r in DP.contamination_flags(docs).collect()}
     assert 0 not in out                 # benchmark docs are not scored
     assert out == {1: False, 2: True, 3: False}
@@ -106,7 +110,7 @@ def test_pack_chunks_arithmetic(spark):
         (3, "en", "h i"),            # start 7 -> chunk 1
         (10, "de", "x y z"),         # separate shard: start 0, chunk 0
     ]
-    docs = spark.createDataFrame(rows, "doc_id long, lang string, text string")
+    docs = local_frame(spark, rows, "doc_id long, lang string, text string")
     out = {
         r["doc_id"]: (r["n_tokens"], r["start_offset"], r["chunk_id"])
         for r in DP.pack_chunks(docs, max_tokens=6).collect()
@@ -128,7 +132,7 @@ def test_pii_redaction_semantics(spark):
         (3, "clean text with no pii at all just words"),
         (4, "edge 999.999.999.999 and a@b.io and 12345678901"),
     ]
-    docs = spark.createDataFrame(rows, "doc_id long, text string")
+    docs = local_frame(spark, rows, "doc_id long, text string")
     out = {r["doc_id"]: r for r in redact_pii(docs).collect()}
 
     assert out[1]["clean_text"] == "contact <EMAIL> or visit <IP> today"
@@ -150,7 +154,7 @@ def test_repetition_metrics_planted(spark):
         (2, "all words here are fully distinct tokens okay"),     # 8 distinct
         (3, "one"),                                               # shorter than bigram
     ]
-    docs = spark.createDataFrame(rows, "doc_id long, text string")
+    docs = local_frame(spark, rows, "doc_id long, text string")
     out = {r["doc_id"]: r for r in repetition_metrics(docs).collect()}
 
     assert out[1]["n_tokens"] == 10
@@ -178,7 +182,7 @@ def test_heavy_hitters_planted_adversarial_partitioning(spark):
         if i % 10 == 0:
             base += " hot"
         rows.append((i, base))
-    docs = spark.createDataFrame(rows, "doc_id long, text string").repartition(16)
+    docs = local_frame(spark, rows, "doc_id long, text string").repartition(16)
 
     out = {r["token"]: r["cnt"] for r in
            frequent_tokens(docs, min_frac=0.02, capacity=50).collect()}
@@ -204,7 +208,7 @@ def test_unigram_logprob_hand_computed(spark):
 
     from opcua_ingestion_engine_spark.operators.text import unigram_logprob
 
-    docs = spark.createDataFrame(
+    docs = local_frame(spark,
         [(1, "a a b"), (2, "a b c")], "doc_id long, text string"
     )
     out = {r["doc_id"]: (r["n_tokens"], r["nll"]) for r in
@@ -272,7 +276,7 @@ def test_bpe_planted_corpus(spark):
 
     # 'aaab' x3, 'ab' x2: round 1 merges (a,a) cnt=6; round 2 (b: 'aa a b')
     # pairs: (aa,a)x3,(a,b)x5 -> (a,b) cnt=5; round 3 (aa,ab) cnt=3
-    docs = spark.createDataFrame(
+    docs = local_frame(spark,
         [(1, "aaab aaab ab"), (2, "aaab ab")], "doc_id long, text string"
     )
     merges = B.bpe_train(docs, n_merges=3)
@@ -309,7 +313,7 @@ def test_heavy_hitters_capacity_guard(spark):
 
     from opcua_ingestion_engine_spark.operators.text import frequent_tokens
 
-    docs = spark.createDataFrame([(1, "a b c")], "doc_id long, text string")
+    docs = local_frame(spark, [(1, "a b c")], "doc_id long, text string")
     with _pytest.raises(ValueError, match="superset guarantee"):
         frequent_tokens(docs, min_frac=0.002, capacity=100)
 
@@ -328,7 +332,7 @@ def test_split_leakage_detector_fires_on_planted_neardups(spark):
     rows = [(i, base + f" tail{i}", "en") for i in range(20)]
     rows += [(100 + i, f"unrelated text number {i} with no overlap at all "
               f"word{i}a word{i}b word{i}c", "en") for i in range(5)]
-    docs = spark.createDataFrame(rows, "doc_id long, text string, lang string")
+    docs = local_frame(spark, rows, "doc_id long, text string, lang string")
 
     splits = {r["doc_id"]: r["split"] for r in DP.split_assign(docs).collect()}
     assert len(set(splits[i] for i in range(20))) > 1, (
@@ -360,7 +364,7 @@ def test_bpe_local_and_distributed_paths_agree(spark):
     the per-merge driver round-trip wall)."""
     from opcua_ingestion_engine_spark.operators import bpe as B
 
-    docs = spark.createDataFrame(
+    docs = local_frame(spark,
         [
             (1, "the quick brown fox jumps over the lazy dog the end"),
             (2, "pack my box with five dozen liquor jugs the fox"),
@@ -381,7 +385,7 @@ def test_bpe_local_path_runs_constant_jobs(spark):
     from opcua_ingestion_engine_spark.operators import bpe as B
 
     # three 16-char words x2 occurrences -> 45 learnable merges
-    docs = spark.createDataFrame(
+    docs = local_frame(spark,
         [(1, "abcdefghijklmnop qrstuvwxyz012345 ABCDEFGHIJKLMNOP"),
          (2, "abcdefghijklmnop qrstuvwxyz012345 ABCDEFGHIJKLMNOP")],
         "doc_id long, text string",
@@ -429,7 +433,7 @@ def test_cluster_safe_split_prevents_leakage(spark):
         rows.append((1000 + g * 37, near, "en"))
     rows += [(5000 + i, " ".join(f"n{i}w{j}" for j in range(30)), "en")
              for i in range(20)]
-    docs = spark.createDataFrame(rows, "doc_id long, text string, lang string")
+    docs = local_frame(spark, rows, "doc_id long, text string, lang string")
     pairs = jaccard_pairs(docs, threshold=0.2)
     assert pairs.count() == 12  # every planted pair found, no extras
 
@@ -478,7 +482,7 @@ def test_sliding_chunks_multiwindow_and_edges(spark):
     from opcua_ingestion_engine_spark.operators import datapipe as DP
 
     words = lambda n: " ".join(f"w{i}" for i in range(n))
-    docs = spark.createDataFrame(
+    docs = local_frame(spark,
         [
             (1, words(25)),   # starts 0,6,12,18 (24 dropped: no unseen)
             (2, words(10)),   # exactly one window — NO redundant tail
@@ -530,7 +534,7 @@ def test_softdedup_weights_groups(spark):
     invariant — each distinct content contributes one unit)."""
     from opcua_ingestion_engine_spark.operators import datapipe as DP
 
-    docs = spark.createDataFrame(
+    docs = local_frame(spark,
         [(1, "aa"), (2, "bb"), (3, "aa"), (4, "cc"), (5, "aa"), (6, "bb")],
         "doc_id long, text string",
     )
@@ -552,7 +556,7 @@ def test_token_budget_sample_exact_prefix_without_global_sort(spark):
 
     from opcua_ingestion_engine_spark.operators import datapipe as DP
 
-    docs = spark.createDataFrame(
+    docs = local_frame(spark,
         [(i, " ".join(["w"] * (1 + (i * 7) % 13))) for i in range(300)],
         "doc_id long, text string",
     )
@@ -603,11 +607,11 @@ def test_dsir_weights_rank_target_like_docs_higher(spark):
         dsir_weights,
     )
 
-    target = spark.createDataFrame(
+    target = local_frame(spark,
         [("medical patient dose trial",), ("patient trial outcome dose",)],
         "text string",
     )
-    corpus = spark.createDataFrame(
+    corpus = local_frame(spark,
         [
             (1, "patient dose trial medical"),      # target-like
             (2, "pizza recipe cheese oven"),        # source-only tokens
@@ -642,8 +646,8 @@ def test_dsir_sample_is_deterministic_biased_and_rerollable(spark):
         (i, "patient dose trial medical" if i < 40 else "pizza recipe cheese oven")
         for i in range(200)
     ]
-    corpus = spark.createDataFrame(rows, "doc_id long, text string")
-    target = spark.createDataFrame(
+    corpus = local_frame(spark, rows, "doc_id long, text string")
+    target = local_frame(spark,
         [("medical patient dose trial",)], "text string"
     )
 
@@ -667,7 +671,7 @@ def test_dsir_sample_is_deterministic_biased_and_rerollable(spark):
 
     with _pytest.raises(ValueError, match="non-negative"):
         dsir_sample(corpus, target, -1)
-    empty = spark.createDataFrame([], "doc_id long, text string")
+    empty = local_frame(spark, [], "doc_id long, text string")
     with _pytest.raises(ValueError, match="vocabulary"):
         dsir_sample(empty, empty, 5)
 
@@ -679,10 +683,10 @@ def test_dsir_bigrams_capture_order_unigrams_cannot(spark):
     adjacency, not just vocabulary."""
     from opcua_ingestion_engine_spark.operators.datapipe import dsir_weights
 
-    target = spark.createDataFrame(
+    target = local_frame(spark,
         [("new york city hall",), ("new york city council",)], "text string"
     )
-    corpus = spark.createDataFrame(
+    corpus = local_frame(spark,
         [
             (1, "new york city hall"),   # target-typical adjacency
             (2, "york hall new city"),   # same tokens, shuffled order
@@ -716,7 +720,7 @@ def test_pack_bins_ffd_invariants(spark):
         for i, n in enumerate([900, 700, 600, 500, 400, 400, 300, 200,
                                100, 60, 40, 1500, 2100])
     ]
-    docs = spark.createDataFrame(rows, "doc_id long, text string")
+    docs = local_frame(spark, rows, "doc_id long, text string")
     out = pack_bins(docs, max_tokens=1000, n_shards=1).collect()
     assert len(out) == len(rows)  # every doc packed once
 
@@ -762,7 +766,7 @@ def test_bm25_topk_hand_computed(spark):
 
     from opcua_ingestion_engine_spark.operators.retrieval import bm25_topk
 
-    docs = spark.createDataFrame(
+    docs = local_frame(spark,
         [(1, "fast fast slow"), (2, "fast"), (3, "slow table")],
         "doc_id long, text string",
     )
@@ -794,10 +798,10 @@ def test_rrf_fuse_semantics(spark):
     missing entries contribute zero; ties break on id; validation."""
     from opcua_ingestion_engine_spark.operators.retrieval import rrf_fuse
 
-    a = spark.createDataFrame(
+    a = local_frame(spark,
         [(1, 1), (2, 2), (3, 3)], "doc_id long, rank int"
     )
-    b = spark.createDataFrame(
+    b = local_frame(spark,
         [(2, 1), (4, 2), (1, 3)], "doc_id long, rank int"
     )
     got = rrf_fuse([a, b], k=10).collect()
@@ -833,7 +837,7 @@ def test_bm25_empty_corpus_schema_matches_id_type(spark):
         rrf_fuse,
     )
 
-    full = spark.createDataFrame(
+    full = local_frame(spark,
         [("a", "fast fast slow"), ("b", "fast")], "doc_id string, text string"
     )
     empty = full.filter(F.lit(False))

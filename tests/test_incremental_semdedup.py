@@ -16,9 +16,12 @@ import pytest
 from pyspark.sql import functions as F
 
 from opcua_ingestion_engine_spark.operators.similarity import semantic_dedup
+from opcua_ingestion_engine_spark.session import local_frame
 from opcua_ingestion_engine_spark.streaming.semdedup import (
     IncrementalSemDeDupSink,
 )
+
+pytestmark = pytest.mark.usefixtures("executed_plans")
 
 
 def _corpus(spark, seed: int, n_base: int = 40, dim: int = 8):
@@ -38,7 +41,7 @@ def _corpus(spark, seed: int, n_base: int = 40, dim: int = 8):
                 d /= np.linalg.norm(d)
                 rows.append((vid, [float(x) for x in d]))
                 vid += 1
-    return spark.createDataFrame(
+    return local_frame(spark,
         rows, "vec_id long, embedding array<double>"
     )
 
@@ -66,7 +69,7 @@ def test_incremental_equals_one_shot_under_arbitrary_splits(
     )
     for bid, chunk in enumerate(_splits(rows, seed, 4)):
         sink.process_batch(
-            spark.createDataFrame(
+            local_frame(spark,
                 chunk, "vec_id long, embedding array<double>"
             ),
             bid,
@@ -88,7 +91,7 @@ def test_planted_duplicates_flagged_and_redelivery_exact_once(
     base = [1.0, 0.0, 0.0, 0.0]
     eps_dup = [0.9999, 0.0141, 0.0, 0.0]  # cosine ~0.9999 with base
     far = [0.0, 1.0, 0.0, 0.0]
-    mk = lambda rows: spark.createDataFrame(
+    mk = lambda rows: local_frame(spark,
         rows, "vec_id long, embedding array<double>"
     )
     sink = IncrementalSemDeDupSink(
@@ -124,17 +127,17 @@ def test_restart_recovers_committed_state(spark, tmp_path):
     a = IncrementalSemDeDupSink(root, eps=0.9, n_cells=8)
     chunks = _splits(rows, 7, 3)
     a.process_batch(
-        spark.createDataFrame(chunks[0], "vec_id long, embedding array<double>"), 0
+        local_frame(spark, chunks[0], "vec_id long, embedding array<double>"), 0
     )
     # fresh instance: adopts the frozen centroids + the batch ledger
     b = IncrementalSemDeDupSink(root, eps=0.9, n_cells=8)
     assert np.allclose(b.centroids(), a.centroids())
     b.process_batch(
-        spark.createDataFrame(chunks[0], "vec_id long, embedding array<double>"), 0
+        local_frame(spark, chunks[0], "vec_id long, embedding array<double>"), 0
     )  # replayed first batch: skipped via the recovered ledger
     for bid, chunk in enumerate(chunks[1:], start=1):
         b.process_batch(
-            spark.createDataFrame(chunk, "vec_id long, embedding array<double>"),
+            local_frame(spark, chunk, "vec_id long, embedding array<double>"),
             bid,
         )
     got = sorted(r["vid"] for r in b.survivors(spark).collect())
@@ -148,7 +151,7 @@ def test_restart_recovers_committed_state(spark, tmp_path):
 
 
 def test_oversized_cell_refuses_loudly(spark, tmp_path):
-    mk = lambda rows: spark.createDataFrame(
+    mk = lambda rows: local_frame(spark,
         rows, "vec_id long, embedding array<double>"
     )
     sink = IncrementalSemDeDupSink(

@@ -6,7 +6,11 @@ from __future__ import annotations
 import pytest
 from pyspark.sql import functions as F
 
+from opcua_ingestion_engine_spark.session import local_frame
+
 from tests.conftest import SF_SMOKE
+
+pytestmark = pytest.mark.usefixtures("executed_plans")
 
 
 @pytest.fixture(scope="module")
@@ -527,7 +531,7 @@ def test_banded_buckets_bit_identical_to_column_form(spark):
 
     rows = [(i, [(i * 2654435761 + j * 97) % ((1 << 31) - 1) for j in range(96)])
             for i in range(200)]
-    sig = spark.createDataFrame(rows, "doc_id int, signature array<bigint>")
+    sig = local_frame(spark, rows, "doc_id int, signature array<bigint>")
     bands, rpb = 32, 3
     new = D.banded_buckets(sig, bands, rpb)
     old = sig.select(
@@ -549,7 +553,7 @@ def test_banded_buckets_bit_identical_to_column_form(spark):
     assert new.exceptAll(old).count() == 0
     assert old.exceptAll(new).count() == 0
 
-    short = spark.createDataFrame(
+    short = local_frame(spark,
         [(1, [1, 2, 3])], "doc_id int, signature array<bigint>"
     )
     with pytest.raises(Exception, match="signature too short"):
@@ -732,7 +736,7 @@ def test_image_phash_neardup_planted_cases(spark):
         (6, bytearray(M.encode_png(white))),
     ]
     mm = (
-        spark.createDataFrame(rows, "doc_id long, payload binary")
+        local_frame(spark, rows, "doc_id long, payload binary")
         .select(
             "doc_id",
             "payload",
@@ -764,7 +768,7 @@ def test_image_phash_neardup_planted_cases(spark):
 
     # the registered mixed-corpus query runs end-to-end; same_key="fmt"
     # makes same-format pairing structural, not a fixture accident
-    docs = spark.createDataFrame(
+    docs = local_frame(spark,
         [(i, "word word word") for i in range(20)], "doc_id long, text string"
     )
     out = M.image_neardup_pairs(docs, png_every=7)
@@ -821,7 +825,7 @@ def test_video_frame_sampling_bridges_into_image_path(spark):
 
     from opcua_ingestion_engine_spark.operators import multimodal as M
 
-    docs = spark.createDataFrame(
+    docs = local_frame(spark,
         [(i, "t") for i in range(20)], "doc_id long, text string"
     )
     frames = M.sample_video_frames(docs, y4m_every=9, stride=2).collect()
@@ -870,7 +874,7 @@ def test_clip_neardup_from_shared_frames(spark):
                       (4, [X1, X2, X3])):
         for i, frame in enumerate(clip):
             rows.append((did, i, bytearray(M.encode_png(frame))))
-    frames = spark.createDataFrame(
+    frames = local_frame(spark,
         rows, "doc_id long, frame_idx int, frame_png binary"
     )
     hashed = M.frame_ahash(frames)
@@ -926,7 +930,7 @@ def test_audio_energy_hash_invariances(spark):
         (2, bytearray(M.encode_wav((burst * 0.5).astype(np.int16), 8000))),
         (3, bytearray(M.encode_wav(ramp, 8000))),
     ]
-    wav = spark.createDataFrame(rows, "doc_id long, payload binary")
+    wav = local_frame(spark, rows, "doc_id long, payload binary")
 
     import io
     import wave
@@ -940,7 +944,7 @@ def test_audio_energy_hash_invariances(spark):
         r["doc_id"]: M.audio_energy_hash64(decode(r["payload"]))
         for r in hashes
     }
-    hdf = spark.createDataFrame(
+    hdf = local_frame(spark,
         [(k, v) for k, v in hs.items()], "doc_id long, phash long"
     )
     pairs = {
@@ -993,7 +997,7 @@ def test_curation_minhash_mode_matches_exact_on_planted(spark):
         (3, mut, "en"),                       # near dup of 1
         (4, other, "en"), (5, other + " extra trailing tokens", "en"),
     ]
-    docs = spark.createDataFrame(rows, "doc_id long, text string, lang string")
+    docs = local_frame(spark, rows, "doc_id long, text string, lang string")
 
     for fn in (curate_corpus, curate_corpus_clustered):
         exact = {r["doc_id"] for r in fn(docs).collect()}
@@ -1050,7 +1054,7 @@ def test_repeated_spans_finds_exactly_the_planted_boilerplate(spark):
         (4, " ".join(f"u{i}" for i in range(40))),   # unique: no spans
         (5, "too short"),                            # < k tokens: no windows
     ]
-    docs = spark.createDataFrame(rows, "doc_id long, text string")
+    docs = local_frame(spark, rows, "doc_id long, text string")
     got = sorted(
         (r["doc_id"], r["span_start"], r["span_end"])
         for r in D.repeated_spans(docs, k=15, min_repeats=2).collect()
@@ -1070,7 +1074,7 @@ def test_trim_repeated_spans_removes_only_the_boilerplate(spark):
     tail = {d: " ".join(f"{d}x{i}" for i in range(30)) for d in (1, 2, 3)}
     rows = [(d, header + " " + tail[d]) for d in (1, 2, 3)]
     rows.append((4, " ".join(f"u{i}" for i in range(40))))
-    docs = spark.createDataFrame(rows, "doc_id long, text string")
+    docs = local_frame(spark, rows, "doc_id long, text string")
     got = {
         r["doc_id"]: (r["text"], r["n_tokens_removed"])
         for r in D.trim_repeated_spans(docs, k=15, min_repeats=2).collect()
@@ -1094,7 +1098,7 @@ def test_incremental_spans_equal_batch_under_any_batching(spark):
     rows = [(d, header + " " + " ".join(f"{d}t{i}" for i in range(25)))
             for d in range(1, 7)]
     rows.append((7, " ".join(f"u{i}" for i in range(40))))
-    docs = spark.createDataFrame(rows, "doc_id long, text string")
+    docs = local_frame(spark, rows, "doc_id long, text string")
     expect = sorted(map(tuple, D.repeated_spans(docs, k=15).collect()))
     assert len(expect) == 6  # every header doc reports its span
 
@@ -1119,7 +1123,7 @@ def test_incremental_spans_redelivery_is_idempotent(spark):
     )
 
     solo = (1, " ".join(f"only{i}" for i in range(30)))
-    docs = spark.createDataFrame([solo], "doc_id long, text string")
+    docs = local_frame(spark, [solo], "doc_id long, text string")
     sink = IncrementalSpanDedupSink(k=15)
     sink.process_batch(docs, 0)
     sink.process_batch(docs, 0)  # same-batch_id retry: batch-id guard
@@ -1139,7 +1143,7 @@ def test_incremental_spans_failed_attempt_leaves_state_untouched(spark, monkeypa
     from opcua_ingestion_engine_spark.streaming import spans as SP
 
     header = " ".join(f"lic{i}" for i in range(20))
-    docs = spark.createDataFrame(
+    docs = local_frame(spark,
         [(d, header + " " + " ".join(f"{d}t{i}" for i in range(25)))
          for d in (1, 2)],
         "doc_id long, text string",
@@ -1187,7 +1191,7 @@ def test_incremental_spans_batch_id_retry_and_postings_compaction(spark):
     header = " ".join(f"lic{i}" for i in range(20))
     rows = [(d, header + " " + " ".join(f"{d}t{i}" for i in range(25)))
             for d in range(1, 5)]
-    docs = spark.createDataFrame(rows, "doc_id long, text string")
+    docs = local_frame(spark, rows, "doc_id long, text string")
     expect = sorted(map(tuple, D.repeated_spans(docs, k=15).collect()))
 
     sink = IncrementalSpanDedupSink(k=15)
@@ -1203,7 +1207,7 @@ def test_incremental_spans_batch_id_retry_and_postings_compaction(spark):
     # failed-attempt retry: simulate by delivering a NEW batch_id whose
     # docs were never committed (the guard keys on batch_id + seen ids
     # derived only from committed windows)
-    extra = spark.createDataFrame(
+    extra = local_frame(spark,
         [(9, header + " " + " ".join(f"9t{i}" for i in range(25)))],
         "doc_id long, text string",
     )
@@ -1222,7 +1226,7 @@ def test_incremental_spans_within_batch_duplicates_collapse(spark):
     )
 
     solo = (1, " ".join(f"only{i}" for i in range(30)))
-    docs = spark.createDataFrame([solo, solo], "doc_id long, text string")
+    docs = local_frame(spark, [solo, solo], "doc_id long, text string")
     sink = IncrementalSpanDedupSink(k=15)
     sink.process_batch(docs, 0)
     assert sink.result().count() == 0
@@ -1240,7 +1244,7 @@ def test_incremental_sink_trim_equals_batch_trim(spark):
     rows = [(d, header + " " + " ".join(f"{d}t{i}" for i in range(25)))
             for d in range(1, 6)]
     rows.append((6, " ".join(f"u{i}" for i in range(40))))
-    docs = spark.createDataFrame(rows, "doc_id long, text string")
+    docs = local_frame(spark, rows, "doc_id long, text string")
     expect = sorted(map(tuple, D.trim_repeated_spans(docs, k=15).collect()))
 
     sink = IncrementalSpanDedupSink(k=15)
@@ -1274,7 +1278,7 @@ def test_filtered_topk_filters_before_search(spark):
     rows += [(10 + i, v(1.0, 0.4 + 0.1 * i), 1) for i in range(1, 7)]
     rows += [(20 + i, v(1.0, 0.001 * i), 2) for i in range(1, 7)]
     rows += [(99, v(0.5, 0.5), None)]  # NULL label: never a candidate
-    emb = spark.createDataFrame(
+    emb = local_frame(spark,
         rows, "vec_id long, embedding array<float>, label int"
     )
     out = S.filtered_topk(
@@ -1364,7 +1368,7 @@ def test_quality_rep_keeps_cleanest_cluster_member(spark):
     hi_q = ("the code " + " ".join(f"tok{i}" for i in range(30))
             + " is of the and the for with")
     other = "the quick brown fox " + " ".join(f"w{i}" for i in range(30))
-    docs = spark.createDataFrame(
+    docs = local_frame(spark,
         [(1, low_q, "en"), (2, hi_q, "en"), (9, other, "en")],
         "doc_id long, text string, lang string",
     )
@@ -1374,7 +1378,7 @@ def test_quality_rep_keeps_cleanest_cluster_member(spark):
     assert kept_q == {2, 9}  # quality rule keeps the cleaner doc 2
 
     # exact duplicates (identical text, equal quality) tie -> min id
-    docs2 = spark.createDataFrame(
+    docs2 = local_frame(spark,
         [(5, low_q, "en"), (6, low_q, "en"), (9, other, "en")],
         "doc_id long, text string, lang string",
     )
@@ -1398,8 +1402,8 @@ def test_cross_corpus_neardup_exact_equals_minhash_and_decontaminates(spark):
     # noise; A also contains an exact pair WITHIN A (must NOT pair)
     a_rows = [(1, near), (2, other), (3, other)]  # 2,3 identical in A
     b_rows = [(10, base), (11, " ".join(f"v{i}" for i in range(40)))]
-    A = spark.createDataFrame(a_rows, "doc_id long, text string")
-    B = spark.createDataFrame(b_rows, "doc_id long, text string")
+    A = local_frame(spark, a_rows, "doc_id long, text string")
+    B = local_frame(spark, b_rows, "doc_id long, text string")
 
     exact = {
         (r["doc_a"], r["doc_b"])
@@ -1481,7 +1485,7 @@ def test_semantic_dedup_exact_mode_and_keep_rules(spark):
         (2, mix(0.00)),   # farthest from the ortho-pulled global centroid
         (3, [float(x) for x in ortho]),  # ~90 degrees away: singleton
     ]
-    tiny = spark.createDataFrame(
+    tiny = local_frame(spark,
         rows, "vec_id long, embedding array<float>"
     )
     kept_min = sorted(
@@ -1529,7 +1533,7 @@ def test_semantic_dedup_clustered_recall_on_planted_dups(spark):
         v /= np.linalg.norm(v)
         rows.append((vid, [float(x) for x in v]))
         vid += 1
-    emb = spark.createDataFrame(rows, "vec_id long, embedding array<float>")
+    emb = local_frame(spark, rows, "vec_id long, embedding array<float>")
 
     exact = {
         (r["vec_a"], r["vec_b"])
@@ -1575,7 +1579,7 @@ def test_semantic_dedup_truncation_surfaced_and_auto_cells(spark):
         (i, [float(x) for x in (base + rng.randn(8) * 1e-3)])
         for i in range(30)
     ]
-    emb = spark.createDataFrame(rows, "vec_id long, embedding array<float>")
+    emb = local_frame(spark, rows, "vec_id long, embedding array<float>")
 
     logger = logging.getLogger(
         "opcua_ingestion_engine_spark.operators.similarity"
@@ -1644,7 +1648,7 @@ def test_zero_norm_vectors_never_nan(spark):
         v = rng.randn(8)
         rows.append((i, "a", [float(x) for x in v]))
     rows.append((90, "a", [0.0] * 8))  # zero CORPUS vector
-    emb = spark.createDataFrame(
+    emb = local_frame(spark,
         rows, "vec_id long, label string, embedding array<float>"
     )
 
@@ -1741,7 +1745,7 @@ def test_pca_reduce_semantics_and_ann_recall(spark):
     rng = np.random.RandomState(5)
     basis = np.linalg.qr(rng.randn(64, 8))[0].T            # (8, 64)
     low = rng.randn(400, 8) @ basis + rng.randn(400, 64) * 0.01
-    planted = spark.createDataFrame(
+    planted = local_frame(spark,
         [(i, [float(x) for x in low[i]]) for i in range(400)],
         "vec_id long, embedding array<float>",
     )
@@ -1791,7 +1795,7 @@ def test_random_projection_jl_properties(spark):
             (1000 + j,
              [float(x) for x in (base[j] + rng.randn(64) * 0.02)])
         )
-    planted = spark.createDataFrame(
+    planted = local_frame(spark,
         rows, "vec_id long, embedding array<float>"
     )
     red = S.random_project(planted, k=24, seed=7)
@@ -1860,7 +1864,7 @@ def test_semdedup_truncation_sentinel_when_unobserved(spark):
         (i, [float(x) for x in (base + rng.randn(8) * 1e-3)])
         for i in range(20)
     ]
-    emb = spark.createDataFrame(rows, "vec_id long, embedding array<float>")
+    emb = local_frame(spark, rows, "vec_id long, embedding array<float>")
 
     # observed run plants real counts in the global
     S.semantic_dedup_pairs(

@@ -8,7 +8,11 @@ from __future__ import annotations
 import pytest
 from pyspark.sql import functions as F
 
+from opcua_ingestion_engine_spark.session import local_frame
+
 from tests.conftest import SF_SMOKE
+
+pytestmark = pytest.mark.usefixtures("executed_plans")
 
 
 @pytest.fixture(scope="module")
@@ -68,7 +72,7 @@ def test_persisted_bucketed_state_rounds(spark, fx):
         )
         stored = spark.table(table)
 
-    got = ingest.snapshot_from_state(stored, mon, tpl)
+    got = ingest.snapshot_from_state(stored, *ingest.static_rows(mon, tpl))
     assert _rows(got) == _rows(batch)
     for t in names:
         spark.sql(f"DROP TABLE IF EXISTS {t}")
@@ -327,7 +331,7 @@ def test_versioned_table_two_writers_both_commit(spark, tmp_path):
     from opcua_ingestion_engine_spark.operators import tablefmt as TF
 
     root = str(tmp_path / "cas_table")
-    base = spark.createDataFrame([("a", 0), ("b", 0)], "key string, val int")
+    base = local_frame(spark, [("a", 0), ("b", 0)], "key string, val int")
     assert TF.commit_version(base, root) == 0
 
     barrier = threading.Barrier(2)
@@ -343,7 +347,7 @@ def test_versioned_table_two_writers_both_commit(spark, tmp_path):
             if first[0]:
                 first[0] = False
                 barrier.wait(timeout=30)  # both writers read base BEFORE either claims
-            return spark.createDataFrame(
+            return local_frame(spark,
                 sorted(counts.items()), "key string, val int"
             )
 
@@ -385,7 +389,7 @@ def test_vacuum_grace_spares_inflight_commits(spark, tmp_path):
     from opcua_ingestion_engine_spark.operators import tablefmt as TF
 
     root = str(tmp_path / "grace_table")
-    df = spark.createDataFrame([("a", 1)], "key string, val int")
+    df = local_frame(spark, [("a", 1)], "key string, val int")
     TF.commit_version(df, root)
 
     orphan = os.path.join(root, "data", "v00001-inflight")
@@ -1096,11 +1100,11 @@ def test_snapshot_diff_classification(spark):
     the old=None empty-table baseline."""
     from opcua_ingestion_engine_spark.operators import tablefmt as TF
 
-    old = spark.createDataFrame(
+    old = local_frame(spark,
         [(1, "a", 10), (2, "b", None), (3, "c", 30), (4, None, 40)],
         "k int, s string, x int",
     )
-    new = spark.createDataFrame(
+    new = local_frame(spark,
         [(2, "b", None), (3, "c2", 30), (4, "now", 40), (5, "e", 50)],
         "k int, s string, x int",
     )
@@ -1195,7 +1199,7 @@ def test_matview_incremental_equals_recompute(spark, tmp_path):
     )
 
     src, vr = str(tmp_path / "src"), str(tmp_path / "view")
-    mk = lambda rows: spark.createDataFrame(rows, "k int, g string, x double")
+    mk = lambda rows: local_frame(spark, rows, "k int, g string, x double")
     view = MaterializedAggView(
         src, vr, group_keys=["g"], sum_cols=["x"], row_keys=["k"]
     )
@@ -1242,7 +1246,7 @@ def test_matview_lost_cas_rebases_to_noop(spark, tmp_path, monkeypatch):
     from opcua_ingestion_engine_spark.operators import tablefmt as TF
 
     src, vr = str(tmp_path / "src"), str(tmp_path / "view")
-    df = spark.createDataFrame([(1, "a", 1.0), (2, "b", 2.0)], "k int, g string, x double")
+    df = local_frame(spark, [(1, "a", 1.0), (2, "b", 2.0)], "k int, g string, x double")
     TF.commit_version(df, src)
     view = MV.MaterializedAggView(
         src, vr, group_keys=["g"], sum_cols=["x"], row_keys=["k"]
@@ -1431,7 +1435,7 @@ def test_matview_min_max_delete_the_extremum(spark, tmp_path, monkeypatch):
     from opcua_ingestion_engine_spark.operators import tablefmt as TF
 
     src, vr = str(tmp_path / "src"), str(tmp_path / "view")
-    mk = lambda rows: spark.createDataFrame(rows, "k int, g string, x double")
+    mk = lambda rows: local_frame(spark, rows, "k int, g string, x double")
     view = MV.MaterializedAggView(
         src, vr, group_keys=["g"], sum_cols=["x"], row_keys=["k"],
         min_cols=["x"], max_cols=["x"],
@@ -2298,7 +2302,7 @@ def test_matview_avg_and_approx_distinct(spark, tmp_path, monkeypatch):
     from opcua_ingestion_engine_spark.operators import tablefmt as TF
 
     src, vr = str(tmp_path / "src"), str(tmp_path / "view")
-    mk = lambda rows: spark.createDataFrame(
+    mk = lambda rows: local_frame(spark,
         rows, "k int, g string, x double, u bigint"
     )
     view = MV.MaterializedAggView(
@@ -2492,7 +2496,7 @@ def test_tablefmt_chaos(spark, tmp_path, seed):
     root = str(tmp_path / f"chaos{seed}")
 
     def mk(keys, val):
-        return spark.createDataFrame(
+        return local_frame(spark,
             [(int(k), int(val)) for k in keys], "k bigint, val bigint"
         )
 
@@ -2613,7 +2617,7 @@ def test_matview_all_aggregate_kinds_combined(spark, tmp_path):
     from opcua_ingestion_engine_spark.operators import tablefmt as TF
 
     src, vr = str(tmp_path / "src"), str(tmp_path / "view")
-    mk = lambda rows: spark.createDataFrame(
+    mk = lambda rows: local_frame(spark,
         rows, "k int, g string, x double, u bigint"
     )
     view = MV.MaterializedAggView(
@@ -2932,7 +2936,7 @@ def test_stats_agg_nulls_strings_and_evolution(spark, tmp_path):
     # k statistics at all (all-null chunk) and conservatively demote
     # the whole directory to the scan path
     TF.commit_append(
-        spark.createDataFrame(
+        local_frame(spark,
             [(1, "a"), (2, "b"), (None, "c")], "k int, s string"
         ).coalesce(1),
         root,
@@ -2962,9 +2966,9 @@ def test_stats_agg_nulls_strings_and_evolution(spark, tmp_path):
     # schema evolution: the first dir predates column "extra" — a prune
     # on it excludes that dir with no scan, and the count is exact
     root2 = str(tmp_path / "saggev")
-    TF.commit_append(spark.createDataFrame([(1,)], "k int"), root2)
+    TF.commit_append(local_frame(spark, [(1,)], "k int"), root2)
     TF.commit_append(
-        spark.createDataFrame([(2, 7), (3, 8)], "k int, extra int"),
+        local_frame(spark, [(2, 7), (3, 8)], "k int, extra int"),
         root2,
         evolve=True,
     )
@@ -3149,7 +3153,7 @@ def test_timestamp_time_travel(spark, tmp_path, monkeypatch):
     # answer is always a prefix of the version history)
     clock["t"] = 290.0
     TF.commit_append(
-        spark.createDataFrame([(100,)], "k bigint"), root
+        local_frame(spark, [(100,)], "k bigint"), root
     )                                                          # v3 @ 290
     assert TF.version_as_of(root, 295.0) == 3
     assert TF.version_as_of(root, 300.0) == 3
@@ -3380,7 +3384,7 @@ def test_deletion_vectors_restore_append_and_bounds(spark, tmp_path):
 
     # append after the delete: vectors carry, deleted row stays gone
     TF.commit_append(
-        spark.createDataFrame([(100, 200)], "k long, v long"), root
+        local_frame(spark, [(100, 200)], "k long, v long"), root
     )
     got = sorted(r["k"] for r in TF.read_version(spark, root).collect())
     assert 3 not in got and 100 in got and len(got) == 20
@@ -3503,7 +3507,7 @@ def test_incremental_bm25_index_equals_one_shot(spark, tmp_path):
     from opcua_ingestion_engine_spark.operators.retrieval import bm25_topk
     from opcua_ingestion_engine_spark.streaming import bm25index as B
 
-    docs = spark.createDataFrame(
+    docs = local_frame(spark,
         [
             (1, "fast fast slow"),
             (2, "fast"),
@@ -3994,7 +3998,7 @@ def test_bm25_index_two_writer_race(spark, tmp_path, seed):
     from opcua_ingestion_engine_spark.operators.retrieval import bm25_topk
     from opcua_ingestion_engine_spark.streaming import bm25index as B
 
-    docs = spark.createDataFrame(
+    docs = local_frame(spark,
         [
             (i, t)
             for i, t in enumerate(
@@ -4087,7 +4091,7 @@ def test_merge_on_read_upsert_and_update(spark, tmp_path):
             full.filter((F.col("k") >= i * 10) & (F.col("k") < (i + 1) * 10)),
             root,
         )
-    b = spark.createDataFrame(
+    b = local_frame(spark,
         [(3, 999), (25, 888), (100, 777)], "k long, v long"
     )
     v = TF.commit_upsert(spark, root, b, keys=["k"], mor=True)
@@ -4190,7 +4194,7 @@ def test_matview_over_dv_deletes_stays_incremental(spark, tmp_path):
     )
 
     src, vr = str(tmp_path / "dsrc"), str(tmp_path / "dview")
-    mk = lambda rows: spark.createDataFrame(rows, "k int, g string, x double")
+    mk = lambda rows: local_frame(spark, rows, "k int, g string, x double")
     view = MaterializedAggView(
         src, vr, group_keys=["g"], sum_cols=["x"], min_cols=["x"]
     )
@@ -4239,14 +4243,14 @@ def test_deletion_vectors_under_schema_evolution(spark, tmp_path):
 
     root = str(tmp_path / "dvev")
     TF.commit_append(
-        spark.createDataFrame([(1, 10), (2, 20), (3, 30)], "k long, v long"),
+        local_frame(spark, [(1, 10), (2, 20), (3, 30)], "k long, v long"),
         root,
     )
     # dv-delete BEFORE evolution
     TF.delete_where_dv(spark, root, "k = 2")
     # evolve: add column w
     TF.commit_append(
-        spark.createDataFrame(
+        local_frame(spark,
             [(4, 40, "x"), (5, 50, "y")], "k long, v long, w string"
         ),
         root,
@@ -4374,7 +4378,7 @@ def test_bm25_index_survives_compaction_metadata_only(spark, tmp_path):
     from opcua_ingestion_engine_spark.operators.retrieval import bm25_topk
 
     root = str(tmp_path / "bm25c")
-    docs = spark.createDataFrame(
+    docs = local_frame(spark,
         [
             (i, f"alpha beta gamma doc{i % 7} " + "pad " * (i % 5 + 1))
             for i in range(120)
@@ -4443,7 +4447,7 @@ def test_bm25_serve_never_touches_doclens_data(spark, tmp_path):
     )
 
     root = str(tmp_path / "bm25lean")
-    docs = spark.createDataFrame(
+    docs = local_frame(spark,
         [
             (i, f"alpha beta doc{i % 5} " + "pad " * (i % 4 + 1))
             for i in range(90)
@@ -4530,7 +4534,7 @@ def test_consolidate_dv_folds_sidecars(spark, tmp_path):
     # change-feed across the consolidation stays KEYLESS fast path:
     # append -> dv-deletes -> consolidate -> append must serve O(changes)
     TF.commit_append(
-        spark.createDataFrame([(200, 600)], "k long, v long"), root
+        local_frame(spark, [(200, 600)], "k long, v long"), root
     )
     feed = TF.table_changes(spark, root, cv - 1)  # spans consolidation
     kinds = {r[TF.CHANGE_TYPE_COL] for r in feed.collect()}
@@ -4673,7 +4677,7 @@ def test_change_feed_fast_path_across_mor_upserts(spark, tmp_path):
     from opcua_ingestion_engine_spark.operators import tablefmt as TF
 
     root = str(tmp_path / "morfeed")
-    mk = lambda rows: spark.createDataFrame(rows, "k long, v long")
+    mk = lambda rows: local_frame(spark, rows, "k long, v long")
     TF.commit_append(mk([(1, 10), (2, 20), (3, 30)]), root)       # v0
     TF.commit_append(mk([(4, 40), (5, 50)]), root)                # v1
     # mor upsert: k=2 updated, k=6 inserted                        v2
@@ -4723,7 +4727,7 @@ def test_change_feed_fast_path_across_mor_upserts(spark, tmp_path):
     )
 
     src2, vr2 = str(tmp_path / "morsrc2"), str(tmp_path / "morview2")
-    mkg = lambda rows: spark.createDataFrame(rows, "k long, g string, x long")
+    mkg = lambda rows: local_frame(spark, rows, "k long, g string, x long")
     view = MaterializedAggView(src2, vr2, group_keys=["g"], sum_cols=["x"])
     TF.commit_append(mkg([(1, "a", 1), (2, "a", 2), (3, "b", 4)]), src2)
     assert view.refresh(spark) == 0
@@ -4966,7 +4970,7 @@ def test_neardup_sink_two_writer_race(spark, tmp_path, seed):
         lo = 4 * c + (c % 2)
         rows.append((lo, base))
         rows.append((lo + 2, tweak))
-    docs = spark.createDataFrame(rows, "doc_id long, text string")
+    docs = local_frame(spark, rows, "doc_id long, text string")
     want = _rows(
         D.minhash_neardup_pairs(docs, threshold=0.2)
         .select("doc_a", "doc_b")
@@ -5024,7 +5028,7 @@ def test_check_constraints_enforced_on_every_write_path(spark, tmp_path):
     from opcua_ingestion_engine_spark.operators import tablefmt as TF
 
     root = str(tmp_path / "ck")
-    mk = lambda rows: spark.createDataFrame(rows, "k long, v long")
+    mk = lambda rows: local_frame(spark, rows, "k long, v long")
     TF.commit_version(mk([(1, 10), (2, 20)]), root)
     TF.add_constraint(spark, root, "v_nonneg", "v >= 0")
 
@@ -5058,7 +5062,7 @@ def test_check_constraints_enforced_on_every_write_path(spark, tmp_path):
 
     # NULL evaluations pass (SQL CHECK semantics)
     TF.commit_append(
-        spark.createDataFrame([(4, None)], "k long, v long"), root
+        local_frame(spark, [(4, None)], "k long, v long"), root
     )
 
     # deletes never violate (they land no rows)
@@ -5081,7 +5085,7 @@ def test_constraints_skip_data_identical_maintenance(spark, tmp_path, monkeypatc
     from opcua_ingestion_engine_spark.operators import tablefmt as TF
 
     root = str(tmp_path / "ckmaint")
-    mk = lambda rows: spark.createDataFrame(rows, "k long, v long")
+    mk = lambda rows: local_frame(spark, rows, "k long, v long")
     TF.commit_version(mk([(1, 10), (2, 20)]), root)
     TF.add_constraint(spark, root, "v_nonneg", "v >= 0")
     TF.commit_append(mk([(3, 30)]), root)
@@ -5122,7 +5126,7 @@ def test_constraints_two_writer_race(spark, tmp_path, seed):
     from opcua_ingestion_engine_spark.operators import tablefmt as TF
 
     root = str(tmp_path / f"ckrace{seed}")
-    mk = lambda rows: spark.createDataFrame(rows, "k long, v long")
+    mk = lambda rows: local_frame(spark, rows, "k long, v long")
     TF.commit_version(mk([(0, 0)]), root)
     TF.add_constraint(spark, root, "v_nonneg", "v >= 0")
     errors: list = []
@@ -5176,7 +5180,7 @@ def test_bm25_forget_ids_right_to_be_forgotten(spark, tmp_path):
     )
 
     root = str(tmp_path / "bm25forget")
-    docs = spark.createDataFrame(
+    docs = local_frame(spark,
         [
             (i, f"alpha beta doc{i % 5} " + "pad " * (i % 4 + 1))
             for i in range(60)
@@ -5219,13 +5223,13 @@ def test_bm25_forget_ids_right_to_be_forgotten(spark, tmp_path):
     # a forgotten id has left the registry: re-ingest with NEW text
     sink2 = IncrementalBm25IndexSink(root, auto_compact=None)
     sink2.process_batch(
-        spark.createDataFrame(
+        local_frame(spark,
             [(7, "alpha alpha alpha doc2")], "doc_id long, text string"
         ),
         99,
     )
     re_docs = keep_docs.unionByName(
-        spark.createDataFrame(
+        local_frame(spark,
             [(7, "alpha alpha alpha doc2")], "doc_id long, text string"
         )
     )
@@ -5253,8 +5257,8 @@ def test_ann_forget_ids_right_to_be_forgotten(spark, tmp_path):
     # id 3 is the EXACT duplicate of the query: guaranteed top-1
     q_vec = base[3].copy()
     rows = [(i, [float(x) for x in base[i]]) for i in range(80)]
-    vectors = spark.createDataFrame(rows, "vec_id long, embedding array<double>")
-    queries = spark.createDataFrame(
+    vectors = local_frame(spark, rows, "vec_id long, embedding array<double>")
+    queries = local_frame(spark,
         [(0, [float(x) for x in q_vec])], "vec_id long, embedding array<double>"
     )
     root = str(tmp_path / "annforget")
@@ -5281,7 +5285,7 @@ def test_ann_forget_ids_right_to_be_forgotten(spark, tmp_path):
 
     # forgotten id re-opens for append-mode ingestion with a NEW vector
     sink.process_batch(
-        spark.createDataFrame(
+        local_frame(spark,
             [(3, [float(x) for x in q_vec])],
             "vec_id long, embedding array<double>",
         ),

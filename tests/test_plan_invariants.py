@@ -3,7 +3,7 @@ registered query, the physical plan must contain
 
 - zero CartesianProduct, ever;
 - BroadcastNestedLoopJoin only where a 1-row scalar threshold rides a
-  broadcast (flagship/liveness logical-now, heartbeat now, default-row
+  broadcast (liveness logical-now, heartbeat now, default-row
   injection, TPC-H Q11/Q22 thresholds, capped embedding slice);
 - SortMergeJoin only for full-outer joins and the O(state)-sized anti
   joins AQE broadcast-converts at runtime (Venn reconcile, S10 seed,
@@ -16,6 +16,10 @@ registered query, the physical plan must contain
 A new query that silently introduces a cartesian product, an extra fact
 scan, or an unplanned sort-merge join fails here before it ever reaches
 a cluster.
+
+The current-state view (``ingest.snapshot_from_state``) is pinned more
+tightly: one stage, so one job with one task, with its single-partition
+``Coalesce`` sitting on a materialization, never on a fact scan.
 """
 
 from __future__ import annotations
@@ -155,7 +159,7 @@ ALLOW: dict[str, tuple[int, int, dict[str, int]]] = {
     # LSH stage adds a second documents pass (signature + verify prune)
     "q_e7_curation_minhash": (0, 1, {"documents": 2}),
     "q_f8_online_probe": (1, 0, {}),
-    "q_flagship_modvalues": (1, 0, {}),
+    "q_flagship_modvalues": (0, 0, {}),
     "q_j5_venn_reconcile": (0, 1, {}),
     "q_join_full_nation_supplier": (0, 1, {}),
     "q_profile_lineitem": (0, 0, {"lineitem": 2}),
@@ -236,3 +240,101 @@ def test_three_way_join_prunes_fact_columns(spark):
     assert li_schemas, p
     for col in ("l_quantity", "l_extendedprice", "l_shipdate"):
         assert all(col not in l for l in li_schemas), li_schemas
+
+
+def _children(node) -> list:
+    """Children of a physical plan node, looking through adaptive
+    execution's wrappers (the adaptive plan and its query stages)."""
+    name = node.getClass().getSimpleName()
+    if name == "AdaptiveSparkPlanExec":
+        return [node.executedPlan()]
+    if name.endswith("QueryStageExec"):
+        return [node.plan()]
+    children = node.children()
+    return [children.apply(i) for i in range(children.size())]
+
+
+def _plan_nodes(node):
+    stack = [node]
+    while stack:
+        node = stack.pop()
+        yield node
+        stack.extend(_children(node))
+
+
+def _coalesce_over_scan(plan) -> list[str]:
+    """Scans that a ``Coalesce`` pulls into its task with no shuffle or
+    materialization in between (an RDD scan is a checkpoint; a local
+    table scan is driver-held rows)."""
+    out = []
+    for node in _plan_nodes(plan):
+        if node.getClass().getSimpleName() != "CoalesceExec":
+            continue
+        stack = [node.child()]
+        while stack:
+            below = stack.pop()
+            name = below.getClass().getSimpleName()
+            if "Exchange" in name or "ShuffleQueryStage" in name or name in (
+                "RDDScanExec", "LocalTableScanExec",
+            ):
+                continue
+            if "Scan" in name:
+                out.append(below.simpleString(25))
+            stack.extend(_children(below))
+    return out
+
+
+def test_flagship_coalesce_sits_on_the_checkpoint(spark):
+    """The batch flagship's one-partition snapshot reads the checkpointed
+    per-point aggregate, so the events scan and its shuffle stay outside
+    the single task."""
+    from opcua_ingestion_engine_spark.plans import QUERIES
+
+    df = QUERIES["q_flagship_modvalues"].fn(spark, SF_SMOKE)
+    df.collect()
+    plan = df._jdf.queryExecution().executedPlan()
+    names = {n.getClass().getSimpleName() for n in _plan_nodes(plan)}
+    assert "CoalesceExec" in names and "RDDScanExec" in names, plan.toString()
+    assert _coalesce_over_scan(plan) == [], plan.toString()
+    # the walker does see a coalesce straight over the fact scan
+    bad = spark.read.parquet(f"{SF_SMOKE}/events.parquet").coalesce(1)
+    assert _coalesce_over_scan(bad._jdf.queryExecution().executedPlan())
+
+
+@pytest.mark.parametrize("durable", [True, False], ids=["durable", "ephemeral"])
+def test_sink_snapshot_is_one_job_one_task(spark, tmp_path, durable):
+    """A merge sink's current-state view runs as one stage: its executed
+    plan holds no exchange, broadcast, join or runtime filter, and one
+    collect launches exactly one job with one task."""
+    from opcua_ingestion_engine_spark import catalog as C
+    from opcua_ingestion_engine_spark.streaming import replay
+
+    sink = replay.ModvaluesMergeSink(
+        C.site_devices(spark, SF_SMOKE), C.sos_templates(spark),
+        C.opc_client_connections(spark),
+        state_root=str(tmp_path / "state") if durable else None,
+    )
+    sink.process_batch(C.opc_updates(spark, SF_SMOKE), 0)
+
+    sc = spark.sparkContext
+    group = f"snapshot-{'durable' if durable else 'ephemeral'}"
+    snap = sink.snapshot()
+    sc.setJobGroup(group, "current-state read")
+    try:
+        rows = snap.collect()
+    finally:
+        sc.setJobGroup("", "")
+    assert rows
+    sc._jsc.sc().listenerBus().waitUntilEmpty()
+    tracker = sc.statusTracker()
+    jobs = tracker.getJobIdsForGroup(group)
+    tasks = sum(
+        tracker.getStageInfo(s).numTasks
+        for j in jobs for s in tracker.getJobInfo(j).stageIds
+    )
+    assert (len(jobs), tasks) == (1, 1), (jobs, tasks)
+
+    plan = snap._jdf.queryExecution().executedPlan().toString()
+    for node in ("Exchange", "BroadcastNestedLoopJoin", "SortMergeJoin",
+                 "might_contain"):
+        assert node not in plan, (node, plan)

@@ -17,6 +17,9 @@ import pytest
 from pyspark.sql import functions as F
 
 from opcua_ingestion_engine_spark.operators import quality as Q
+from opcua_ingestion_engine_spark.session import local_frame
+
+pytestmark = pytest.mark.usefixtures("executed_plans")
 
 
 GOOD_WORDS = ["insight", "theorem", "evidence", "rigorous", "analysis"]
@@ -92,7 +95,7 @@ def _auc(scores_labels):
 
 def test_train_separates_planted_labels_and_is_deterministic(spark):
     rows = _planted_corpus()
-    df = spark.createDataFrame(
+    df = local_frame(spark,
         rows, "doc_id long, text string, label double"
     ).repartition(6)
     model = Q.train_quality_classifier(
@@ -121,7 +124,7 @@ def test_train_matches_pure_python_reference_exactly(spark):
     one partial gradient, same row order, same scalar ops — weights and
     bias must be bit-equal, not approximately equal."""
     rows = _planted_corpus(n=60, seed=3)
-    df = spark.createDataFrame(
+    df = local_frame(spark,
         rows, "doc_id long, text string, label double"
     ).coalesce(1)
     nf, epochs, lr, l2 = 1 << 10, 8, 0.3, 1e-3
@@ -137,7 +140,7 @@ def test_vocab_export_serves_the_same_dot_product(spark):
     """to_vocab + score_quality_vocab (pure JVM decimal fold) reproduces
     the hashed model's logit within the 6-dp weight rounding."""
     rows = _planted_corpus(n=120, seed=11)
-    df = spark.createDataFrame(rows, "doc_id long, text string, label double")
+    df = local_frame(spark, rows, "doc_id long, text string, label double")
     model = Q.train_quality_classifier(
         df, n_features=1 << 12, epochs=12, lr=0.5, l2=1e-4
     )
@@ -157,7 +160,7 @@ def test_vocab_export_serves_the_same_dot_product(spark):
 def test_vocab_scoring_edges(spark):
     """No-vocab-hit docs score exactly the bias; empty vocab matches
     nothing; decimal fold is exact (no float accumulation drift)."""
-    df = spark.createDataFrame(
+    df = local_frame(spark,
         [(0, "zzz yyy xxx"), (1, "pos pos neg"), (2, "pos")],
         "doc_id long, text string",
     )
@@ -184,7 +187,7 @@ def test_curate_corpus_model_mode(spark):
         (3, "casino winner free click buy casino winner free", "en"),
         (4, "theorem evidence of rigorous analysis and insight", "en"),
     ]
-    df = spark.createDataFrame(rows, "doc_id long, text string, lang string")
+    df = local_frame(spark, rows, "doc_id long, text string, lang string")
     vocab = {w: 0.5 for w in GOOD_WORDS}
     vocab.update({w: -0.5 for w in BAD_WORDS})
     from opcua_ingestion_engine_spark.operators.curate import curate_corpus
@@ -216,7 +219,7 @@ def test_null_text_scores_null(spark):
     the vocab path's SQL convention (split(NULL) -> NULL logit) — and
     train as the empty document, instead of crashing on txt.split of
     None (ADVICE r8)."""
-    labeled = spark.createDataFrame(
+    labeled = local_frame(spark,
         [
             (1, "insight analysis rigorous evidence", 1.0),
             (2, "casino winner free click", 0.0),

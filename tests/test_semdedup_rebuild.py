@@ -23,11 +23,14 @@ from pyspark.sql import functions as F
 
 from opcua_ingestion_engine_spark.operators import tablefmt as TF
 from opcua_ingestion_engine_spark.operators.similarity import semantic_dedup
+from opcua_ingestion_engine_spark.session import local_frame
 from opcua_ingestion_engine_spark.streaming.semdedup import (
     IncrementalSemDeDupSink,
     _centroid_path,
     _quant_gen,
 )
+
+pytestmark = pytest.mark.usefixtures("executed_plans")
 
 
 def _corpus(spark, seed: int, n_base: int = 36, dim: int = 8):
@@ -47,7 +50,7 @@ def _corpus(spark, seed: int, n_base: int = 36, dim: int = 8):
 
 
 def _mk(spark, rows):
-    return spark.createDataFrame(rows, "vec_id long, embedding array<double>")
+    return local_frame(spark, rows, "vec_id long, embedding array<double>")
 
 
 def _df(spark, rows):

@@ -683,6 +683,70 @@ def test_batch_reader_matches_catalog_derivation(spark, tmp_path):
         ), sf_dir
 
 
+def test_windowed_partition_read_equals_filtered_full_read(tmp_path):
+    """A connector partition reads only its received-ts window from the
+    history (a source-ts filter before pandas conversion), and yields
+    exactly the rows the full read yields after filtering by connection
+    and window — for TIMESTAMP(MICROS), TIMESTAMP(NANOS) and raw int64
+    nanosecond fixtures, on windows that cut through the 150 s arrival
+    delay."""
+    import numpy as np
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    from opcua_ingestion_engine_spark.streaming.opcua_source import (
+        _ConnWindowPartition,
+        _load_notifications,
+        _read_partition,
+    )
+
+    micros = f"{_seeded_events(str(tmp_path / 'us'))}/events.parquet"
+    table = pq.read_table(micros)
+    ns = table.column("ts").cast(pa.timestamp("ns"))
+    paths = {"us": micros}
+    for unit, col in (("ns", ns), ("int64", ns.cast(pa.int64()))):
+        (tmp_path / unit).mkdir()
+        paths[unit] = str(tmp_path / unit / "events.parquet")
+        pq.write_table(table.set_column(table.schema.get_field_index("ts"), "ts", col),
+                       paths[unit], row_group_size=200)
+
+    full = _load_notifications(micros)
+    received = np.sort(full["received_us"].to_numpy())
+    windows = [
+        (int(received[0]) - 1, int(received[-1])),
+        (int(received[500]), int(received[900])),
+        (int(received[1200]), int(received[1200]) + 100_000_000),
+    ]
+    for unit, path in paths.items():
+        assert _load_notifications(path)["received_us"].equals(full["received_us"]), unit
+        for start, end in windows:
+            if end - start < 200_000_000:
+                assert len(_load_notifications(path, (start, end))) < len(full) / 4
+            for conn in (0, 1, 2):
+                part = _ConnWindowPartition(path, conn, start, end)
+                got = sorted(
+                    (eid, dev, int(src), int(rcv))
+                    for batch in _read_partition(part)
+                    for eid, dev, src, rcv in zip(
+                        batch.column("event_id").to_pylist(),
+                        batch.column("daq_name").to_pylist(),
+                        batch.column("source_ts").cast(pa.int64()).to_pylist(),
+                        batch.column("received_ts").cast(pa.int64()).to_pylist(),
+                    )
+                )
+                want = full[
+                    (full["conn_id"] == conn)
+                    & (full["received_us"] > start)
+                    & (full["received_us"] <= end)
+                ]
+                assert got == sorted(zip(
+                    want["event_id"].tolist(),
+                    ("DEV-" + (want["user_id"] % 100).astype(str).str.zfill(3)).tolist(),
+                    want["source_us"].tolist(),
+                    want["received_us"].tolist(),
+                )), (unit, start, end, conn)
+
+
 def _python_backed_nodes(df) -> list[str]:
     """Nodes of ``df``'s physical plan that run Python: Python/pandas
     evaluation nodes, and RDD scans whose lineage holds a PythonRDD (a
